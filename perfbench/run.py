@@ -4,9 +4,9 @@
     python3 perfbench/run.py --workload NAME --seed N --seconds S --trace 0|1
 
 Run from the repository root. One run starts a Spark session, sets the
-workload up three times (fresh engine root, ingest, server), warms it up,
-runs the timed closed-loop window, checks every answer, and prints one JSON
-object as the last line of stdout:
+workload up (fresh engine root, ingest, server), warms it up, runs the
+timed closed-loop window, checks every answer, and prints one JSON object
+as the last line of stdout:
 
     {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
 
@@ -32,7 +32,7 @@ ROOT = os.path.dirname(HERE)
 sys.path[:0] = [HERE, ROOT]
 
 from tracing import PKG  # noqa: E402
-SETUP_REPS = 3
+
 DRIVER_MEM = "2g"  # local mode: the driver heap is the executor heap
 WORK_DIR = os.path.join(ROOT, ".perfbench-work")
 OUT_DIR = os.path.join(ROOT, ".perfbench-out")
@@ -78,15 +78,24 @@ def start_session(work: str):
         app_name="perfbench",
         extra_conf={
             "spark.ui.showConsoleProgress": "false",
-            # -Xms: a heap that never resizes keeps peak RSS from
-            # depending on when G1 decides to grow it
-            "spark.driver.extraJavaOptions": f"-Xms{DRIVER_MEM} -Djava.io.tmpdir={os.path.join(work, 'tmp')}",
+            # A heap that never resizes and is touched at start keeps peak
+            # RSS from depending on when G1 grows it or how far a run's
+            # allocations reach into it.
+            "spark.driver.extraJavaOptions": f"-Xms{DRIVER_MEM} -XX:+AlwaysPreTouch "
+                                             f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}",
             "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
             # keep every job of a run in the status store for the trace
             "spark.ui.retainedJobs": "100000",
             "spark.ui.retainedStages": "100000",
         },
     )
+
+
+def cpu_s(pid: int) -> float:
+    """User plus system CPU time of process ``pid`` so far."""
+    with open(f"/proc/{pid}/stat") as f:
+        fields = f.read().rpartition(")")[2].split()
+    return (int(fields[11]) + int(fields[12])) / os.sysconf("SC_CLK_TCK")
 
 
 def jvm_peak_rss_mb(pid: int) -> float:
@@ -123,35 +132,39 @@ def storage_counts(root: str) -> tuple[int, int]:
 E2E_UNITS = {
     "setup_s": "s",
     "read_p50_ms": "ms",
-    "read_tail_ms": "ms",
     "write_p50_ms": "ms",
-    "write_tail_ms": "ms",
     "ops_per_s": "1/s",
     "peak_rss_mb": "MB",
     "stored_bytes_ratio": "ratio",
 }
 
 
-def end_to_end(stmts, window_s: float, setup_s: float, setup_writes_ms, peak_mb: float,
-               stored_ratio: float) -> tuple[dict, dict]:
+def end_to_end(stmts, window_s: float, setup_s: float, setup_writes: dict[str, list[float]],
+               peak_mb: float, stored_ratio: float, pooled_reads: bool = False) -> tuple[dict, dict]:
+    """The end-to-end metrics of the window's statements. A workload that
+    runs no DML in its window takes its write samples from its set-up
+    ingests. The tails go to the detail line only: a window holds too few
+    samples for a percentile above the median with ten beyond it."""
     import stats
 
-    reads = [s.ms for s in stmts if s.kind == "read"]
-    writes = [s.ms for s in stmts if s.kind == "write"] or list(setup_writes_ms)
-    read_tail, write_tail = stats.tail(reads), stats.tail(writes)
+    reads = by_shape(s for s in stmts if s.kind == "read")
+    writes = by_shape(s for s in stmts if s.kind == "write") or setup_writes
+    all_reads = [v for vs in reads.values() for v in vs]
     values = {
         "setup_s": setup_s,
-        "read_p50_ms": stats.median(reads),
-        "read_tail_ms": read_tail["value"],
-        "write_p50_ms": stats.median(writes),
-        "write_tail_ms": write_tail["value"],
+        "read_p50_ms": stats.median(all_reads) if pooled_reads else stats.shape_p50(reads),
+        "write_p50_ms": stats.shape_p50(writes),
         "ops_per_s": len(stmts) / window_s,
         "peak_rss_mb": peak_mb,
         "stored_bytes_ratio": stored_ratio,
     }
     metrics = {k: {"value": values[k], "unit": unit} for k, unit in E2E_UNITS.items()}
-    detail = {"read_tail": read_tail, "write_tail": write_tail,
-              "writes_from": "statements" if any(s.kind == "write" for s in stmts) else "setup_ingest"}
+    detail = {
+        "read_tail": stats.tail(all_reads),
+        "write_tail": stats.tail([v for vs in writes.values() for v in vs]),
+        "writes_from": "statements" if any(s.kind == "write" for s in stmts) else "setup_ingest",
+        "shapes": {sh: [len(v), round(stats.median(v), 1)] for sh, v in {**reads, **writes}.items()},
+    }
     return metrics, detail
 
 
@@ -191,17 +204,17 @@ def run(args: argparse.Namespace, work: str) -> tuple[dict, dict]:
         counters = tracing.JvmCounters(spark) if args.trace else None
         ctx = workloads.Context(spark, data_dir, work, args.seed, tracer, counters)
         wl = cls(ctx)
-        reps = []
-        for rep in range(SETUP_REPS):
-            t0 = time.perf_counter()
-            wl.setup(rep)
-            reps.append(time.perf_counter() - t0)
+        t0 = time.perf_counter()
+        wl.setup()
+        wl_setup_s = time.perf_counter() - t0
+        bytes_before = tree_bytes(wl.root)
         t0 = time.perf_counter()
         wl.warm_up()
         warm_s = time.perf_counter() - t0
-        bytes_before = tree_bytes(wl.root)
         cg0 = (counters.compiles(), counters.compile_ms()) if counters else None
+        cpu0 = (cpu_s(os.getpid()), cpu_s(jvm_pid))
         window_s = wl.measure(args.seconds)
+        window_cpu_s = [cpu_s(os.getpid()) - cpu0[0], cpu_s(jvm_pid) - cpu0[1]]
         cg1 = (counters.compiles(), counters.compile_ms()) if counters else None
         rss = {"python": resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0,
                "jvm": jvm_peak_rss_mb(jvm_pid)}
@@ -211,21 +224,25 @@ def run(args: argparse.Namespace, work: str) -> tuple[dict, dict]:
         wl.close()
         wl.verify()
         measured = [s for s in wl.stmts if s.measured]
-        setup_s = session_s + stats.median(reps) + warm_s
-        e2e, e2e_detail = end_to_end(measured, window_s, setup_s, ctx.setup_writes_ms,
-                                     peak_mb, stored_ratio)
+        setup_s = session_s + wl_setup_s + warm_s
+        e2e, e2e_detail = end_to_end(measured, window_s, setup_s, ctx.setup_writes,
+                                     peak_mb, stored_ratio, cls.pooled_reads)
         attempted, failed = tally(wl.stmts, leftover)
         detail.update(e2e_detail)
         detail.update({
-            "session_start_s": session_s, "setup_reps_s": reps, "warm_up_s": warm_s,
+            "session_start_s": session_s, "workload_setup_s": wl_setup_s, "warm_up_s": warm_s,
             "peak_rss_mb": rss,
             "window_s": window_s, "statements": len(measured),
+            # CPU the window used, Python then JVM: a window that takes
+            # longer for the same CPU time waited for the host
+            "window_cpu_s": window_cpu_s,
             "unmeasured_statements": len(wl.stmts) - len(measured),
-            "suite_s": window_s if cls is workloads.AnalyticScan else None,
+            # one warm pass: the sum of the per-shape medians
+            "suite_s": (sum(stats.median(v) for v in by_shape(measured).values()) / 1000.0
+                        if cls is workloads.AnalyticScan else None),
             "leftover_entries": leftover, "failed_ratio": failed / attempted,
             "data_rows": datagen.sizes(cls.sf),
             "clients": cls.clients, "loop": "closed", "sf": cls.sf,
-            "shapes": {sh: [len(v), round(stats.median(v), 1)] for sh, v in by_shape(measured).items()},
             "errors": [f"{s.shape}: {s.error or 'wrong answer'} :: {s.sql[:160]}"
                        for s in wl.stmts if not s.ok][:5],
         })
@@ -263,6 +280,7 @@ def stop_session(spark) -> None:
 
 
 def by_shape(stmts) -> dict[str, list[float]]:
+    """Latencies (ms) by statement shape."""
     out: dict[str, list[float]] = {}
     for s in stmts:
         out.setdefault(s.shape, []).append(s.ms)

@@ -38,6 +38,17 @@ def median(values: list[float]) -> float:
     return statistics.median(values)
 
 
+def shape_p50(by_shape: dict[str, list[float]]) -> float:
+    """Each statement shape's median latency, averaged over the shapes.
+
+    A median pooled over different shapes falls between two shapes' cost
+    levels and jumps with the mix a window happens to hold; every shape
+    weighing the same keeps the figure independent of the mix."""
+    if not by_shape:
+        raise ValueError("no shapes")
+    return statistics.fmean(median(v) for v in by_shape.values())
+
+
 def covered(intervals: list[tuple[float, float]], lo: float, hi: float) -> float:
     """Length of the union of ``intervals`` clipped to ``[lo, hi]``."""
     clipped = sorted((max(a, lo), min(b, hi)) for a, b in intervals if b > lo and a < hi)

@@ -212,10 +212,24 @@ def test_datagen_is_deterministic():
 def test_end_to_end_metrics_match_benchmark_json():
     stmts = [workloads.Stmt(str(i), kind, "s", "q", start=0.0, end=0.1 * (i + 1))
              for i, kind in enumerate(["read"] * 5 + ["write"] * 3)]
-    metrics, _ = run.end_to_end(stmts, 2.0, 1.0, [], 100.0, 1.0)
+    metrics, _ = run.end_to_end(stmts, 2.0, 1.0, {}, 100.0, 1.0)
     spec = {m["name"]: m["unit"] for m in SPEC["end_to_end"]}
     assert {k: v["unit"] for k, v in metrics.items()} == spec
     assert all(v["value"] != 0 for v in metrics.values())
+
+
+def test_latency_is_per_shape_median_averaged_over_shapes():
+    # a slow shape's median counts once, whatever the mix of the window
+    assert stats.shape_p50({"fast": [10.0, 12.0, 11.0, 500.0], "slow": [100.0, 90.0, 110.0]}) == 55.75
+    stmts = [workloads.Stmt(str(i), "read", shape, "q", start=0.0, end=ms / 1000.0)
+             for i, (shape, ms) in enumerate([("a", 10), ("a", 20), ("a", 30), ("b", 100)])]
+    ingests = {"ingest": [300.0, 100.0, 200.0]}
+    metrics, detail = run.end_to_end(stmts, 1.0, 1.0, ingests, 1.0, 1.0)
+    assert metrics["read_p50_ms"]["value"] == pytest.approx(60.0)
+    assert metrics["write_p50_ms"]["value"] == pytest.approx(200.0)  # no DML: set-up ingests
+    assert detail["writes_from"] == "setup_ingest"
+    pooled, _ = run.end_to_end(stmts, 1.0, 1.0, ingests, 1.0, 1.0, pooled_reads=True)
+    assert pooled["read_p50_ms"]["value"] == pytest.approx(25.0)  # median of all four reads
 
 
 def test_per_layer_metrics_match_benchmark_json():

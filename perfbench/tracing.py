@@ -111,12 +111,11 @@ class Tracer(NullTracer):
         """Wrap the public calls of the engine's layers (see README.md)."""
         import importlib
 
-        from pyspark.sql import DataFrame
-
         engine = importlib.import_module(f"{PKG}.engine")
         catalog = importlib.import_module(f"{PKG}.catalog")
         tables = importlib.import_module(f"{PKG}.tables")
         server = importlib.import_module(f"{PKG}.server")
+        fmt = importlib.import_module(f"{PKG}.functions.format")
         self._sc = spark.sparkContext
         tracer = self
 
@@ -125,16 +124,23 @@ class Tracer(NullTracer):
         def ref_sql(eng, text, *args, **kwargs):
             rid = tracer.current_rid()
             tracer.set_group(rid, "build")
-            with tracer.span("refsql"):
-                out = orig_ref_sql(eng, text, *args, **kwargs)
-            if isinstance(out, DataFrame):
-                tracer.set_group(rid, "plan")
-                with tracer.span("catalyst.plan"):
-                    out._jdf.queryExecution().executedPlan()
+            try:
+                with tracer.span("refsql"):
+                    return orig_ref_sql(eng, text, *args, **kwargs)
+            finally:
                 tracer.set_group(rid, "exec")
-            return out
 
         self._patch(engine.Engine, "ref_sql", ref_sql)
+
+        # The REST path renders ``df.limit(n)``, a DataFrame of its own: its
+        # plan is forced where rendering creates it, so the span times the
+        # plan that then runs.
+        orig_format_result = fmt.format_result
+
+        def format_result(df, *args, **kwargs):
+            return orig_format_result(_PlanOnLimit(df, tracer), *args, **kwargs)
+
+        self._patch(fmt, "format_result", format_result)
 
         def timed(name: str, fn):
             def wrapper(*args, **kwargs):
@@ -184,6 +190,27 @@ class Tracer(NullTracer):
 
 
 _MISSING = object()
+
+
+class _PlanOnLimit:
+    """A DataFrame stand-in whose ``limit`` forces the limited DataFrame's
+    physical plan in a ``catalyst.plan`` span; everything else is the
+    wrapped DataFrame's."""
+
+    def __init__(self, df, tracer: Tracer):
+        self._df, self._tracer = df, tracer
+
+    def limit(self, n: int):
+        out = self._df.limit(n)
+        rid = self._tracer.current_rid()
+        self._tracer.set_group(rid, "plan")
+        with self._tracer.span("catalyst.plan"):
+            out._jdf.queryExecution().executedPlan()
+        self._tracer.set_group(rid, "exec")
+        return out
+
+    def __getattr__(self, name: str):
+        return getattr(self._df, name)
 
 
 class JvmCounters:
