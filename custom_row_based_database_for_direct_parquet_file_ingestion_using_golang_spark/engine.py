@@ -40,7 +40,7 @@ from .catalog import (
     parse_timestamp as _parse_timestamp,
     spark_type_for,
 )
-from .tables import ParquetTableStore
+from .tables import ParquetTableStore, local_frame
 
 IMAGE_EXTENSIONS = (".jpg", ".jpeg", ".png", ".gif", ".bmp", ".tiff", ".webp")
 
@@ -78,8 +78,8 @@ def _coerce_native(value: Any, dtype: T.DataType, decl: str) -> Any:
     r13 verdict "What's wrong" #1). Mirrors Spark string-cast semantics
     for the scalar types; parse failures raise a loud ValueError naming
     the declared type. Values already in shape pass through; compound
-    types (array/struct/map/binary) trust the caller — ``createDataFrame``
-    verifies against the declared schema (wrapped loudly by the callers).
+    types (array/struct/map/binary) trust the caller — ``local_frame``'s
+    row verifier checks them (wrapped loudly by the callers).
     """
     if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
         if isinstance(value, datetime.datetime):
@@ -432,7 +432,7 @@ class Engine:
         retention on, the pre-truncate table retires as a version and
         stays time-travelable."""
         meta = self.catalog.get(name)
-        empty = self.spark.createDataFrame([], meta.schema)
+        empty = local_frame(self.spark, [], meta.schema)
         self.store.overwrite(name, empty, meta.partition_by)
 
     def show_tables(self) -> list[str]:
@@ -529,7 +529,8 @@ class Engine:
     def coerce_rows_df(self, name: str, rows: list[dict[str, Any]]) -> DataFrame:
         """The INSERT VALUES coercion as a DataFrame builder WITHOUT the
         append — the ON CONFLICT path (round-13) resolves the batch
-        against the table before anything is written."""
+        against the table before anything is written. The batch is a
+        JVM-side local relation (``tables.local_frame``)."""
         meta = self.catalog.get(name)
         declared = {c.name for c in meta.columns}
         coerced = []
@@ -559,10 +560,11 @@ class Engine:
                     ) from exc
             coerced.append(out)
         try:
-            return self.spark.createDataFrame(coerced, meta.schema)
-        except TypeError as exc:
-            # Round-14: PySparkTypeError (a TypeError) must not escape
-            # the dialect raw — name the table and declared schema.
+            return local_frame(self.spark, coerced, meta.schema)
+        except (TypeError, ValueError, ArithmeticError) as exc:
+            # The verifier's PySparkTypeError/PySparkValueError (and an
+            # Arrow rejection, e.g. a decimal past its precision) must not
+            # escape the dialect raw — name the table and declared schema.
             raise ValueError(
                 f"INSERT into '{name}': a value does not fit the declared "
                 f"schema {meta.schema.simpleString()}: {exc}"
@@ -940,7 +942,7 @@ class Engine:
             partition_by=partition_by or [],
             primary_key=primary_key or [],
         )
-        empty = self.spark.createDataFrame([], meta.schema)
+        empty = local_frame(self.spark, [], meta.schema)
         self.store.overwrite(name, empty, meta.partition_by)
         self.catalog.update_table(meta)
         self.store.vacuum(name, keep=0)

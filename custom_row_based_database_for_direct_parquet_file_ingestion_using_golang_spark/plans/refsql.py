@@ -9140,8 +9140,8 @@ class RefSQL:
         declared = [c.name for c in meta.columns]
         rows = self._values_rows(cur, cols if cols is not None else declared)
         inc = self.engine.coerce_rows_df(table, rows)
-        # monotonically_increasing_id over a local list-backed frame is
-        # partition-ordered, so it preserves the VALUES list order.
+        # The batch is a local relation sliced into partitions in list
+        # order, so monotonically_increasing_id preserves the VALUES order.
         return inc.withColumn("__ord", F.monotonically_increasing_id())
 
     def _insert_on_conflict(
@@ -9273,14 +9273,30 @@ class RefSQL:
         # NULL conflict keys: reject like a real PRIMARY KEY would
         # (DuckDB errors; silently never-conflicting NULLs would make
         # the idempotent-ingest pattern quietly duplicate rows).
+        # DO UPDATE: duplicate conflict keys in one batch would update
+        # the same row twice — Postgres/DuckDB raise; so do we. Both
+        # checks are one aggregate over the batch, one job.
         nullcond = None
         for k in keys:
             c = F.col(k).isNull()
             nullcond = c if nullcond is None else (nullcond | c)
-        if inc.filter(nullcond).limit(1).count() > 0:
+        if do_update:
+            probe = inc.groupBy(*keys).count().agg(
+                F.max(nullcond.cast("int")).alias("nulls"),
+                F.max("count").alias("most"),
+            ).collect()[0]
+            has_null, dup = bool(probe["nulls"]), (probe["most"] or 0) > 1
+        else:
+            has_null, dup = inc.filter(nullcond).limit(1).count() > 0, False
+        if has_null:
             raise ValueError(
                 f"NULL in conflict key column(s) {keys} — ON CONFLICT "
                 "keys follow PRIMARY KEY semantics (no NULLs)"
+            )
+        if dup:
+            raise ValueError(
+                "ON CONFLICT DO UPDATE cannot affect the same row twice "
+                f"— duplicate conflict key(s) {keys} in the batch"
             )
         tgt = self.engine.table(table)
 
@@ -9319,17 +9335,6 @@ class RefSQL:
             )
             return self.engine.append_df(table, fresh)
 
-        # DO UPDATE: duplicate conflict keys in one batch would update
-        # the same row twice — Postgres/DuckDB raise; so do we.
-        dup = (
-            inc.groupBy(*keys).count().filter(F.col("count") > 1)
-            .limit(1).count()
-        )
-        if dup:
-            raise ValueError(
-                "ON CONFLICT DO UPDATE cannot affect the same row twice "
-                f"— duplicate conflict key(s) {keys} in the batch"
-            )
         exc = inc.drop("__ord").select(
             *[F.col(c).alias(f"__exc_{c}") for c in tcols]
         )

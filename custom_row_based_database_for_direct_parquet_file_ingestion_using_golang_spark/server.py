@@ -54,6 +54,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from .engine import Engine
 from .functions.format import render_statement_result
 from .plans import nl
+from .plans.refsql import split_statements, tokenize
 
 _MAX_UPLOAD = 64 << 20  # reference: r.ParseMultipartForm(64 << 20)
 
@@ -152,6 +153,27 @@ def derive_title(msg: str, max_words: int = 8, max_len: int = 60) -> str:
 
 
 # -- request handling ---------------------------------------------------------
+
+
+_MAIN_VERBS = ("select", "insert", "update", "delete", "merge")
+
+
+def _reads_only(stmt: str) -> bool:
+    """Whether one statement is a plain or WITH-fronted SELECT. The main
+    verb of a WITH statement is its first keyword outside the CTE bodies'
+    parentheses; EXECUTE, and anything unrecognized, counts as a write."""
+    verb = stmt.split(None, 1)[0].lower()
+    if verb != "with":
+        return verb == "select"
+    depth = 0
+    for tok in tokenize(stmt):
+        if tok == "(":
+            depth += 1
+        elif tok == ")":
+            depth -= 1
+        elif depth == 0 and tok.lower() in _MAIN_VERBS:
+            return tok.lower() == "select"
+    return False
 
 
 def _run_ref_statement(engine: Engine, query: str) -> str:
@@ -484,14 +506,13 @@ class ApiHandler(BaseHTTPRequestHandler):
         self._json({"success": True, "result": rendered})
 
     def _execute_rendered(self, sql: str) -> str:
-        """Run one RefSQL statement under the lock its verb requires:
-        SELECTs share (concurrent reads), everything else is exclusive.
-        Rendering stays inside the scope — the copy-on-write table swap
-        must never run mid-collect."""
-        verb = sql.split(None, 1)[0].upper() if sql else ""
+        """Run a RefSQL script under the lock its statements require: a
+        script of plain or WITH-fronted SELECTs shares (concurrent reads),
+        anything else is exclusive. Rendering stays inside the scope — the
+        copy-on-write table swap must never run mid-collect."""
         scope = (
             self.rwlock.read_locked()
-            if verb == "SELECT"
+            if all(_reads_only(s) for s in split_statements(sql))
             else self.rwlock.write_locked()
         )
         with scope:

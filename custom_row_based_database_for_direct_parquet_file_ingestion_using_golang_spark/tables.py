@@ -20,11 +20,94 @@ single-writer guarantee the reference has.
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import os
 import shutil
 import uuid
+import zoneinfo
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _make_type_verifier
+
+# Spark's widest decimal; HALF_UP is how the JVM rounds to a declared scale.
+_DECIMAL_CTX = decimal.Context(prec=38, rounding=decimal.ROUND_HALF_UP)
+
+
+def local_frame(spark: SparkSession, rows: list[dict], schema: T.StructType) -> DataFrame:
+    """Driver-local rows (dicts keyed by field name) as a DataFrame.
+
+    The rows are checked with PySpark's own row verifier, so a value that
+    does not fit the schema raises the same TypeError/ValueError as
+    PySpark's row-list path. They then travel as one Arrow table that the
+    JVM decodes into a ``LocalRelation``: no pickled RDD, so no Spark job
+    over the batch ever starts a Python worker.
+
+    A naive TIMESTAMP is wall time in the session time zone, the zone
+    Spark's own string casts read it in; decimals round HALF_UP to the
+    declared scale."""
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    zone = zoneinfo.ZoneInfo(spark.conf.get("spark.sql.session.timeZone"))
+    arrow_schema = to_arrow_schema(schema)
+    columns = []
+    for f, atype in zip(schema.fields, arrow_schema.types):
+        values = [row.get(f.name) for row in rows]
+        conv = _arrow_value(f.dataType, zone)
+        if conv is not None:
+            values = [None if v is None else conv(v) for v in values]
+        columns.append(pa.array(values, type=atype))
+    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
+
+
+def _arrow_value(dtype: T.DataType, zone: datetime.tzinfo):
+    """Converter from a verified Python value of ``dtype`` to the value
+    pyarrow must be given; None where pyarrow takes the value as it is.
+    pyarrow keeps a datetime's wall time and drops its zone, so TIMESTAMP
+    values go in as UTC."""
+    if isinstance(dtype, T.TimestampType):
+        return lambda v: (v if v.tzinfo else v.replace(tzinfo=zone)).astimezone(
+            datetime.timezone.utc
+        )
+    if isinstance(dtype, T.TimestampNTZType):
+        return lambda v: v.replace(tzinfo=None)
+    if isinstance(dtype, T.DecimalType):
+        exp = decimal.Decimal(1).scaleb(-dtype.scale)
+        return lambda v: v.quantize(exp, context=_DECIMAL_CTX)
+    if isinstance(dtype, T.ArrayType):
+        elem = _arrow_value(dtype.elementType, zone)
+        return elem and (lambda v: [None if x is None else elem(x) for x in v])
+    if isinstance(dtype, T.MapType):
+        key = _arrow_value(dtype.keyType, zone)
+        val = _arrow_value(dtype.valueType, zone)
+        if key is None and val is None:
+            return None
+        key, val = key or _same, val or _same
+        return lambda v: {key(k): None if x is None else val(x) for k, x in v.items()}
+    if isinstance(dtype, T.StructType):
+        names = dtype.fieldNames()
+        convs = [_arrow_value(f.dataType, zone) for f in dtype.fields]
+
+        def struct(v):  # pyarrow takes a struct value only as a dict
+            items = zip(names, v) if isinstance(v, (tuple, list)) else (
+                (n, v.get(n)) for n in names
+            )
+            return {
+                n: x if c is None or x is None else c(x)
+                for (n, x), c in zip(items, convs)
+            }
+
+        return struct
+    return None
+
+
+def _same(v):
+    return v
 
 
 class ParquetTableStore:
@@ -61,8 +144,7 @@ class ParquetTableStore:
         later ``col=value/`` directories and corrupt partition discovery
         once it carried rows."""
         path = self.table_path(name)
-        empty = self.spark.createDataFrame([], schema)
-        writer = empty.write.mode("overwrite")
+        writer = local_frame(self.spark, [], schema).write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)

@@ -608,3 +608,73 @@ def test_round10_dialect_verbs_over_rest(api):
         "ON m.k = d.k2 GROUP BY d.label HAVING COUNT(*) > 1",
     )
     assert j["success"] and "even" in j["result"] and "odd" not in j["result"]
+
+
+@pytest.fixture()
+def lock_log(spark, tmp_path):
+    """A live server whose lock records the mode every request ran under
+    and, per mode, the table row counts seen while it was held."""
+    from custom_row_based_database_for_direct_parquet_file_ingestion_using_golang_spark.server import (
+        _RWLock,
+    )
+
+    engine = Engine(spark, str(tmp_path / "db"))
+    engine.ref_sql("CREATE TABLE t (k INT, v TEXT)")
+    engine.ref_sql("INSERT INTO t VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    engine.ref_sql("PREPARE del_one AS DELETE FROM t WHERE k = $1")
+    modes: list[str] = []
+
+    class RecordingLock(_RWLock):
+        def read_locked(self):
+            modes.append("read")
+            return super().read_locked()
+
+        def write_locked(self):
+            modes.append("write")
+            return super().write_locked()
+
+    server = make_server(engine, port=0)
+    server.RequestHandlerClass.rwlock = RecordingLock()
+    thread = threading.Thread(target=server.serve_forever, daemon=True)
+    thread.start()
+    base = f"http://127.0.0.1:{server.server_address[1]}"
+
+    def run(sql: str) -> str:
+        modes.clear()
+        assert _query(base, sql)["success"]
+        assert len(modes) == 1
+        return modes[0]
+
+    yield run
+    server.shutdown()
+    thread.join(timeout=5)
+
+
+@pytest.mark.parametrize(
+    "script",
+    [
+        "SELECT 1 AS one; DELETE FROM t WHERE k = 1",
+        "SELECT 1 AS one; WITH s AS (SELECT k FROM t WHERE k = 1) "
+        "DELETE FROM t WHERE k IN (SELECT k FROM s)",
+        "SELECT 1 AS one; EXECUTE del_one(1)",
+        "WITH s AS (SELECT k FROM t WHERE k = 1) "
+        "DELETE FROM t WHERE k IN (SELECT k FROM s)",
+    ],
+    ids=["select-then-delete", "select-then-cte-delete", "select-then-execute",
+         "cte-delete"],
+)
+def test_script_with_any_write_takes_write_lock(lock_log, script):
+    assert lock_log(script) == "write"
+
+
+@pytest.mark.parametrize(
+    "script",
+    [
+        "SELECT count(*) AS n FROM t",
+        "SELECT 1 AS one; select k FROM t",
+        "WITH s AS (SELECT k FROM t), u AS (SELECT k FROM s) SELECT k FROM u",
+    ],
+    ids=["select", "two-selects", "cte-select"],
+)
+def test_read_only_script_shares_read_lock(lock_log, script):
+    assert lock_log(script) == "read"
